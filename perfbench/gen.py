@@ -48,7 +48,7 @@ def row_checksum(columns: list[np.ndarray]) -> int:
 
 
 # ---------------------------------------------------------------------------
-# ingest_convert: reference-layout HDF5 event files
+# event_pipeline, ingest half: reference-layout HDF5 event files
 # ---------------------------------------------------------------------------
 
 INGEST_ALIASES = ("X", "Y", "t", "ADC")
@@ -124,7 +124,8 @@ def converted_checksum(parquet_dir: str) -> tuple[int, int]:
 
 
 # ---------------------------------------------------------------------------
-# bin_calibrated: event table, calibration constants, reference histogram
+# event_pipeline, binning half: event table, calibration constants,
+# reference histogram
 # ---------------------------------------------------------------------------
 
 #: correction grid on the raw detector coordinates (Tutorial 06, cell 4)
@@ -324,13 +325,15 @@ def write_query_tables(out_dir: str, seed: int, scale: float) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# per-workload entry: ``python -m perfbench.gen <workload> <dir> <seed> <reps>``
+# per-workload entry: ``python -m perfbench.gen <workload> <dir> <seed>``
 # ---------------------------------------------------------------------------
 
 #: input sizes of each workload
 SIZES = {
-    "ingest_convert": {"n_files": 4, "events_per_file": 1_500_000},
-    "bin_calibrated": {"n_events": 2_500_000},
+    "event_pipeline": {
+        "ingest": {"n_files": 4, "events_per_file": 1_500_000},
+        "table": {"n_events": 2_500_000},
+    },
     "query_mix": {"scale": 0.005},
 }
 
@@ -349,13 +352,14 @@ def _files_sha256(root: str) -> str:
 
 def _generate(workload: str, out_dir: str, seed: int) -> dict:
     size = SIZES[workload]
-    if workload == "ingest_convert":
-        return write_ingest_files(out_dir, seed, **size)
-    if workload == "bin_calibrated":
-        info = write_event_table(out_dir, seed, **size)
-        ref = info.pop("corr_ref")
-        info["corr_sha256"] = hashlib.sha256(ref.astype(np.float64).tobytes()).hexdigest()
-        return info
+    if workload == "event_pipeline":
+        table = write_event_table(os.path.join(out_dir, "table"), seed, **size["table"])
+        ref = table.pop("corr_ref")
+        table["corr_sha256"] = hashlib.sha256(ref.astype(np.float64).tobytes()).hexdigest()
+        return {
+            "ingest": write_ingest_files(os.path.join(out_dir, "ingest"), seed, **size["ingest"]),
+            "table": table,
+        }
     return write_query_tables(out_dir, seed, **size)
 
 
@@ -381,30 +385,22 @@ def write_expected(data_dir: str, out_dir: str, queries: list[str]) -> None:
 
 
 def main(argv: list[str]) -> None:
-    """Generate a workload's inputs ``reps`` times into the same
-    directory, timing each, and print one JSON line: the last
-    generation's description, every generation's seconds, and a
-    digest of each generation's files (equal digests show the
-    generator is deterministic)."""
+    """Generate a workload's inputs and print one JSON line: their
+    description and the seconds the generation took."""
     import json
-    import shutil
     import time
 
-    workload, out_dir, seed, reps = argv[0], argv[1], int(argv[2]), int(argv[3])
+    workload, out_dir, seed = argv[0], argv[1], int(argv[2])
     data_dir = os.path.join(out_dir, "data")
-    seconds, digests = [], []
-    for _ in range(reps):
-        shutil.rmtree(data_dir, ignore_errors=True)
-        t0 = time.perf_counter()
-        info = _generate(workload, data_dir, seed)
-        seconds.append(time.perf_counter() - t0)
-        digests.append(_files_sha256(data_dir))
+    t0 = time.perf_counter()
+    info = _generate(workload, data_dir, seed)
+    gen_s = time.perf_counter() - t0
     if workload == "query_mix":
         from perfbench.workloads import QUERIES
 
         info["expected_dir"] = os.path.join(out_dir, "expected")
         write_expected(data_dir, info["expected_dir"], QUERIES)
-    info.update(seed=seed, gen_seconds=seconds, digests=digests)
+    info.update(seed=seed, gen_s=gen_s)
     print(json.dumps(info))
 
 

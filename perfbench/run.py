@@ -13,12 +13,11 @@ in the checkout and is removed at the end.
 
 Sequence of one run:
 
-1. generate the seeded inputs in a child process, twice, and check the
-   two generations are byte-identical;
+1. generate the seeded inputs in a child process (``perfbench/gen.py``;
+   its own tests check that a seed always gives the same files);
 2. start a ``local[<cores>]`` session, with shuffle partitions equal
    to the cores;
-3. an untimed cold pass and an untimed settle pass (their time is
-   part of ``setup_s``);
+3. an untimed cold pass (its time is part of ``setup_s``);
 4. ``--trace 0``: ``seconds // pass_s`` timed passes (at least one),
    where ``pass_s`` is the workload's nominal pass time, so a run
    measures for about ``--seconds``; ``--trace 1``: an untraced pass, a
@@ -44,7 +43,6 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-GEN_REPS = 2
 DEADLINE_S = 170
 
 
@@ -139,7 +137,7 @@ def _environment_record(spark) -> dict:
 
 def _generate(workload: str, work: str, seed: int) -> dict:
     proc = subprocess.run(
-        [sys.executable, "-m", "perfbench.gen", workload, os.path.join(work, "inputs"), str(seed), str(GEN_REPS)],
+        [sys.executable, "-m", "perfbench.gen", workload, os.path.join(work, "inputs"), str(seed)],
         cwd=ROOT,
         capture_output=True,
         text=True,
@@ -170,34 +168,30 @@ def run(args, spec: dict) -> dict:
     _environ(work)
     try:
         inputs = _generate(args.workload, work, args.seed)
-        gen_s = statistics.median(inputs["gen_seconds"])
-        # every generation of one seed must be byte-identical
-        attempted = len(inputs["digests"]) - 1
-        failed = len(set(inputs["digests"])) - 1
+        gen_s = inputs["gen_s"]
+        attempted = failed = 0
         wl = WORKLOADS[args.workload](inputs, work)
 
         t0 = time.perf_counter()
         spark = _start_session(work)
         session_s = time.perf_counter() - t0
         try:
-            # the cold pass, then a settle pass: the first pass after a
-            # cold one still runs 10-20% slower than later ones
-            passes = [wl.run_pass(spark, 0), wl.run_pass(spark, 1)]
-            warm_s = passes[0].wall_s + passes[1].wall_s
+            passes = [wl.run_pass(spark, 0)]
+            warm_s = passes[0].wall_s
             setup = {"gen_s": gen_s, "session.start_s": session_s, "session.warm_pass_s": warm_s}
             if args.trace:
                 # untraced passes on both sides of the traced one, so the
                 # overhead estimate is not skewed by the warming trend
-                passes.append(wl.run_pass(spark, 2))
-                layers, traced = wl.traced_pass(spark, Tracer(spark), 3)
-                passes += [traced, wl.run_pass(spark, 4)]
+                passes.append(wl.run_pass(spark, 1))
+                layers, traced = wl.traced_pass(spark, Tracer(spark), 2)
+                passes += [traced, wl.run_pass(spark, 3)]
             else:
                 # a fixed count, not "until time is up": pass times keep
                 # falling for a few passes, so a count that depends on
                 # how fast this run happens to be shifts the median
                 for _ in range(max(1, int(args.seconds // wl.pass_s))):
                     passes.append(wl.run_pass(spark, len(passes)))
-                setup["pass_walls_s"] = [p.wall_s for p in passes[2:]]
+                setup["pass_walls_s"] = [p.wall_s for p in passes[1:]]
             attempted += sum(p.attempted for p in passes)
             failed += sum(p.failed for p in passes)
 
@@ -207,11 +201,11 @@ def run(args, spec: dict) -> dict:
                     "session.start_s": session_s,
                     "session.warm_pass_s": warm_s,
                     "trace.wall_s": traced.wall_s,
-                    "trace.overhead_s": traced.wall_s - (passes[2].wall_s + passes[4].wall_s) / 2,
+                    "trace.overhead_s": traced.wall_s - (passes[1].wall_s + passes[3].wall_s) / 2,
                 })
                 metrics = _metrics(spec["per_layer"], values)
             else:
-                timed = passes[2:]
+                timed = passes[1:]
                 wall = statistics.median(p.wall_s for p in timed)
                 metrics = _metrics(spec["end_to_end"], {
                     "setup_s": gen_s + session_s + warm_s,

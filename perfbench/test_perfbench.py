@@ -62,6 +62,22 @@ def test_fixed_seed_gives_identical_query_tables(tmp_path):
     assert gen._files_sha256(str(tmp_path / "a")) == gen._files_sha256(str(tmp_path / "b"))
 
 
+def test_fixed_seed_gives_identical_workload_inputs(tmp_path, monkeypatch):
+    """Each workload's whole input set, as a run generates it, depends
+    on the seed alone."""
+    monkeypatch.setitem(gen.SIZES, "event_pipeline", {
+        "ingest": {"n_files": 2, "events_per_file": 20_000},
+        "table": {"n_events": 50_000},
+    })
+    monkeypatch.setitem(gen.SIZES, "query_mix", {"scale": 0.001})
+    for workload in gen.SIZES:
+        dir_a, dir_b = str(tmp_path / workload / "a"), str(tmp_path / workload / "b")
+        a = gen._generate(workload, dir_a, 5)
+        b = gen._generate(workload, dir_b, 5)
+        assert json.dumps(a) == json.dumps(b).replace(dir_b, dir_a)
+        assert gen._files_sha256(dir_a) == gen._files_sha256(dir_b)
+
+
 def test_generated_events_stay_inside_analysis_grid(tmp_path):
     info = gen.write_event_table(str(tmp_path), seed=9, n_events=50_000)
     import pyarrow.parquet as pq

@@ -1,4 +1,4 @@
-"""The three benchmark workloads.
+"""The two benchmark workloads.
 
 Each workload is built from the description of its generated inputs
 (see ``gen.py``) and runs two kinds of pass: an untraced pass, timed as
@@ -6,6 +6,11 @@ a whole and per operation, and a traced pass that forces each layer on
 its own and turns the spans into per-layer metrics. Every pass checks
 its outputs against the engine-independent reference; a wrong or
 failed result counts as a failed operation.
+
+``event_pipeline`` has two halves with inputs of their own: the ingest
+half (:class:`IngestConvert`) and the binning half
+(:class:`BinCalibrated`), which reads a table written with pyarrow so
+it does not depend on the ingest half's parquet write.
 """
 
 from __future__ import annotations
@@ -51,16 +56,12 @@ def _dir_bytes(path: str) -> int:
 
 
 # ---------------------------------------------------------------------------
-# ingest_convert
+# event_pipeline, ingest half
 # ---------------------------------------------------------------------------
 
 
 class IngestConvert:
     """HDF5 event files -> parquet through the public ingest seam."""
-
-    name = "ingest_convert"
-    #: nominal seconds of one warm pass on 4 cores; sets the pass count
-    pass_s = 3.0
 
     def __init__(self, inputs: dict, work: str):
         self.paths = inputs["paths"]
@@ -119,7 +120,7 @@ class IngestConvert:
 
 
 # ---------------------------------------------------------------------------
-# bin_calibrated
+# event_pipeline, binning half
 # ---------------------------------------------------------------------------
 
 
@@ -131,9 +132,6 @@ def _axes(grid):
 
 class BinCalibrated:
     """Raw correction grid, then calibrate -> jitter -> analysis grid."""
-
-    name = "bin_calibrated"
-    pass_s = 4.2
 
     def __init__(self, inputs: dict, work: str):
         self.path = inputs["path"]
@@ -242,6 +240,32 @@ class BinCalibrated:
         layers["grid.collected_rows"] = collected
         wall = dense_c.seconds + dense_k.seconds
         return layers, PassResult(wall, [wall], 2, self._failures(corr, kgrid))
+
+
+class EventPipeline:
+    """One pass converts the HDF5 files, then bins the event table."""
+
+    name = "event_pipeline"
+    #: nominal seconds of one warm pass on 4 cores; sets the pass count
+    pass_s = 7.0
+
+    def __init__(self, inputs: dict, work: str):
+        self.ingest = IngestConvert(inputs["ingest"], work)
+        self.binning = BinCalibrated(inputs["table"], work)
+        self.input_rows = self.ingest.input_rows + self.binning.input_rows
+
+    @staticmethod
+    def _join(a: PassResult, b: PassResult) -> PassResult:
+        wall = a.wall_s + b.wall_s
+        return PassResult(wall, [wall], a.attempted + b.attempted, a.failed + b.failed)
+
+    def run_pass(self, spark, i: int) -> PassResult:
+        return self._join(self.ingest.run_pass(spark, i), self.binning.run_pass(spark, i))
+
+    def traced_pass(self, spark, tracer: Tracer, i: int):
+        ingest_layers, a = self.ingest.traced_pass(spark, tracer, i)
+        bin_layers, b = self.binning.traced_pass(spark, tracer, i)
+        return ingest_layers | bin_layers, self._join(a, b)
 
 
 # ---------------------------------------------------------------------------
@@ -368,4 +392,4 @@ class QueryMix:
         return layers, PassResult(wall, [], len(QUERIES), failed)
 
 
-WORKLOADS = {w.name: w for w in (IngestConvert, BinCalibrated, QueryMix)}
+WORKLOADS = {w.name: w for w in (EventPipeline, QueryMix)}
