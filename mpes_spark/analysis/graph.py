@@ -435,8 +435,9 @@ def triangle_count(
     dst: str = "dst",
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """Exact per-node triangle counts over an undirected edge list via
-    DEGREE-ORDERED edge orientation (the compact-forward /
+    """Eager: runs a ``localCheckpoint`` job (canonical edge set) when
+    called. Exact per-node triangle counts over an undirected
+    edge list via DEGREE-ORDERED edge orientation (the compact-forward /
     node-iterator++ algorithm: Schank & Wagner 2005, Suri &
     Vassilvitskii WWW'11): orient every edge from its lower-(degree,
     id) endpoint to the higher one, enumerate wedges only at each
@@ -501,8 +502,9 @@ def clustering_coefficient(
     dst: str = "dst",
     assume_canonical: bool = False,
 ) -> DataFrame:
-    """Per-node local clustering coefficient cc(v) = T(v) / (deg(v)
-    choose 2) over an undirected edge list — the standard local
+    """Eager: runs ``localCheckpoint`` jobs (canonical edge set, degree
+    table) when called. Per-node local clustering coefficient cc(v) =
+    T(v) / (deg(v) choose 2) over an undirected edge list — the standard local
     density signal (Watts & Strogatz 1998) layered on the degree-
     ordered triangle counter. Returns every node of degree >= 2 as
     (node, deg, n_triangles, n_wedges, cc_micro) where ``cc_micro``

@@ -31,8 +31,10 @@ All stages are DataFrame ops / Spark SQL — no Python UDFs anywhere.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -253,6 +255,60 @@ def lsh_candidate_pairs(
     )
 
 
+def _intersections(
+    pairs: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    broadcast_pairs: bool | None = None,
+    bags: bool = False,
+) -> DataFrame:
+    """Intersection-count core of every verify in this module:
+    (id_a, id_b, icnt, nsh_a, nsh_b) per candidate pair — two
+    equi-joins against the element relations plus one (id_a, id_b)
+    groupBy, so only candidate pairs pay. ``left`` holds the id_a
+    side, ``right`` the id_b side (the same relation for a
+    self-join). ``bags`` reads (id, sh, cnt) multisets: icnt becomes
+    sum(min(cnt_a, cnt_b)) and the sizes sum(cnt). The measures are
+    per-caller projections over these five columns."""
+    def side(el: DataFrame, s: str) -> DataFrame:
+        cnt = [F.col("cnt").alias(f"c{s}")] if bags else []
+        return el.select(F.col(id_col).alias(f"id_{s}"), "sh", *cnt)
+
+    def sizes(el: DataFrame, s: str) -> DataFrame:
+        n = F.sum("cnt") if bags else F.count(F.lit(1))
+        return el.groupBy(id_col).agg(n.alias("nsh")).select(
+            F.col(id_col).alias(f"id_{s}"), F.col("nsh").alias(f"nsh_{s}")
+        )
+
+    inter = (
+        side(left, "a")
+        .join(F.broadcast(pairs) if broadcast_pairs else pairs, "id_a")
+        .join(side(right, "b"), ["id_b", "sh"])
+        .groupBy("id_a", "id_b")
+        .agg(
+            (F.sum(F.least("ca", "cb")) if bags else F.count(F.lit(1))).alias(
+                "icnt"
+            )
+        )
+    )
+    return inter.join(sizes(left, "a"), "id_a").join(sizes(right, "b"), "id_b")
+
+
+def _jaccard():
+    """(Bag) Jaccard over an :func:`_intersections` row."""
+    return F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
+
+
+def _jaccard_over(inter: DataFrame, threshold: float, name: str = "jaccard"):
+    """Pairs at or above ``threshold``: (id_a, id_b, name) with the
+    ratio rounded for output only."""
+    jac = _jaccard()
+    return inter.filter(jac >= threshold).select(
+        "id_a", "id_b", F.round(jac, 6).alias(name)
+    )
+
+
 def verify_jaccard(
     pairs: DataFrame,
     shingles: DataFrame,
@@ -274,24 +330,9 @@ def verify_jaccard(
     in the duplicate-cluster size) AQE instead keeps a shuffled join —
     a forced ``F.broadcast`` there would OOM the executors. Pass
     ``True``/``False`` only to pin the strategy for a known corpus."""
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh"))
-    sa = shingles.select(F.col(id_col).alias("id_a"), "sh")
-    sb = shingles.select(F.col(id_col).alias("id_b"), "sh")
-    pairs_side = F.broadcast(pairs) if broadcast_pairs else pairs
-    inter = (
-        sa.join(pairs_side, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("icnt"))
-    )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("nsh").alias("nsh_a"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("nsh").alias("nsh_b"))
-    jac = F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    return _jaccard_over(
+        _intersections(pairs, shingles, shingles, id_col, broadcast_pairs),
+        threshold,
     )
 
 
@@ -310,26 +351,8 @@ def verify_jaccard_cross(
     plan shape: two equi-joins + one groupBy, paid only by candidate
     pairs; join strategy left to AQE (see :func:`verify_jaccard` on
     why a forced broadcast is wrong under template spam)."""
-    sa = sh_left.select(F.col(id_col).alias("id_a"), "sh")
-    sb = sh_right.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        sa.join(pairs, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("icnt"))
-    )
-    za = sh_left.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh_a")).select(
-        F.col(id_col).alias("id_a"), "nsh_a"
-    )
-    zb = sh_right.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh_b")).select(
-        F.col(id_col).alias("id_b"), "nsh_b"
-    )
-    jac = F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
+    return _jaccard_over(
+        _intersections(pairs, sh_left, sh_right, id_col), threshold
     )
 
 
@@ -341,20 +364,23 @@ def minhash_neardup_pairs(
     k: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-    persist_shingles: bool = True,
 ) -> DataFrame:
-    """End-to-end MinHash near-dup: shingle -> signature -> banded LSH
-    buckets -> candidate pairs -> exact-Jaccard verify.
+    """Eager: pins the shingle relation with a ``localCheckpoint``
+    when called, then returns the lazy MinHash near-dup plan: shingle
+    -> signature -> banded LSH buckets -> candidate pairs ->
+    exact-Jaccard verify.
 
-    The shingle relation feeds three consumers (signatures + both
-    sides of the verification join); without persistence Spark
-    re-derives it — re-scanning and re-exploding the corpus — once per
-    consumer (audited: 14 exchanges -> fewer, 3 scans -> 1).
-    ``persist_shingles`` caches it MEMORY_AND_DISK; the caller may
-    ``unpersist()`` the returned plan's source after materializing."""
-    sh = shingle_table(df, text, n, id_col)
-    if persist_shingles:
-        sh = sh.persist()
+    The shingle relation feeds four consumers (signatures, doc sizes
+    and both sides of the verification join); unpinned, Spark would
+    re-derive it — re-scanning and re-exploding the corpus — once per
+    consumer. The pin is a local checkpoint, not a ``persist``: a
+    persisted relation stays registered with the session's cache
+    manager until someone unpersists it, which a lazily returned plan
+    never can, while checkpoint blocks are released by Spark's
+    ContextCleaner once the returned plan is dropped. The result
+    itself stays lazy, so AQE still picks the verify join strategy
+    from the measured candidate size (see :func:`verify_jaccard`)."""
+    sh = shingle_table(df, text, n, id_col).localCheckpoint(eager=True)
     sigs = minhash_signatures(sh, k, id_col)
     cand = lsh_candidate_pairs(sigs, k, bands, id_col)
     return verify_jaccard(cand, sh, threshold, id_col)
@@ -435,6 +461,31 @@ WHERE CAST(i.icnt AS DOUBLE) / (za.nsh + zb.nsh - i.icnt) >= {threshold!r}
 """.strip()
 
 
+def _blocks(
+    df: DataFrame, text: str, block_tokens: int, id_col: str
+) -> DataFrame:
+    """Block key per doc, (id, bk): its first ``block_tokens``
+    tokens — the :func:`blocked_jaccard_sql` blocking key."""
+    return df.select(
+        F.col(id_col),
+        F.concat_ws(
+            " ", F.slice(F.split(F.col(text), " "), 1, block_tokens)
+        ).alias("bk"),
+    )
+
+
+def _key_pairs(a: DataFrame, b: DataFrame, key: str, id_col: str) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of docs sharing ``key``: the
+    equi-keyed self-join of a key relation (``a`` and ``b`` are the
+    same relation, ``a`` possibly sliced by doc id)."""
+    return (
+        a.select(F.col(id_col).alias("id_a"), key)
+        .join(b.select(F.col(id_col).alias("id_b"), key), key)
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b")
+    )
+
+
 def blocked_jaccard_pairs(
     df: DataFrame,
     text: str = "text",
@@ -444,68 +495,29 @@ def blocked_jaccard_pairs(
     threshold: float = 0.5,
     waves: int = 1,
 ) -> DataFrame:
-    """DataFrame rendering of :func:`blocked_jaccard_sql` (same
-    semantics, value-identical output). The shingle relation is
-    RECOMPUTED by its consumers, not persisted (r9, measured cold
-    under the order-independent bench protocol): its lineage is one
-    pruned scan + a stateless explode, so paying it per consumer
-    beats materializing a corpus-scale relation into storage — and at
-    100 TB a persisted shingle table would be a memory hazard while
-    recompute stays embarrassingly parallel. Use this form when the
-    pair list feeds further computation (e.g. cluster resolution);
-    the SQL twin stays the oracle.
+    """Eager: computes and ``localCheckpoint``s the verified pairs
+    when called. DataFrame rendering of :func:`blocked_jaccard_sql`
+    (same semantics, value-identical output).
 
+    Runs on :func:`_banded_pairs`: at ``waves`` = 1 the shingle
+    relation is persisted for its three verify consumers (sizes +
+    both join sides) and released once the result is materialized;
     ``waves`` > 1 runs candidate+verify per hash band of the block
-    key (r11 scratch bound, see :func:`prefix_filtered_pairs`). Each
+    key (r11 scratch bound, see :func:`prefix_filtered_pairs`),
+    sub-splitting bands whose candidate mass exceeds the cap. Each
     doc has exactly ONE block key, so the bands partition the docs
-    and every pair surfaces in exactly one wave — the union needs no
-    cross-wave distinct."""
-    sh = shingle_table(df, text, n, id_col)
-    blocks = df.select(
-        F.col(id_col),
-        F.concat_ws(
-            " ", F.slice(F.split(F.col(text), " "), 1, block_tokens)
-        ).alias("bk"),
+    and every pair surfaces in exactly one wave. Use this form when
+    the pair list feeds further computation (e.g. cluster
+    resolution); the SQL twin stays the oracle."""
+    return _banded_pairs(
+        _elements(df, text, n, id_col, waves),
+        _blocks(df, text, block_tokens, id_col),
+        "bk",
+        lambda a, b: _key_pairs(a, b, "bk", id_col),
+        lambda c, el, bc: verify_jaccard(c, el, threshold, id_col, bc),
+        id_col,
+        waves,
     )
-
-    def _cand(blk: DataFrame) -> DataFrame:
-        a, b = blk.alias("a"), blk.alias("b")
-        return a.join(
-            b,
-            (F.col("a.bk") == F.col("b.bk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        ).select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-
-    if waves <= 1:
-        # persist: verify consumes the shingle relation three times
-        # (sizes + both join sides). Until r12 the in-plan `.distinct()`
-        # exchange doubled as a shared materialization point
-        # (ReusedExchange); with the distinct now in-row (see
-        # :func:`shingle_table`) an unpersisted lineage would re-run
-        # the scan+explode once per consumer. MEMORY_AND_DISK, the
-        # minhash_neardup_pairs precedent.
-        return verify_jaccard(_cand(blocks), sh.persist(), threshold, id_col)
-    shh = sh.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    parts: list[DataFrame] = []
-    for i in range(waves):
-        cand = _cand(blocks.filter(_wave_band("bk", waves, i))).localCheckpoint(
-            eager=True
-        )
-        # hashed-element verify in waves (see prefix_filtered_pairs)
-        sh_w = _wave_doc_filter(shh, cand, id_col)
-        parts.append(
-            verify_jaccard(
-                cand, sh_w, threshold, id_col, broadcast_pairs=True
-            ).localCheckpoint(eager=True)
-        )
-        _wave_gc(cand)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    return out
 
 
 def blocked_containment_sql(
@@ -630,37 +642,12 @@ def blocked_weighted_jaccard(
     verify with icnt -> sum(min). All-integer numerator/denominator:
     the ratio is one IEEE divide, rounded for output only."""
     sh = weighted_shingle_table(df, text, n, id_col)
-    sizes = sh.groupBy(id_col).agg(F.sum("cnt").alias("nsh"))
-    blocks = df.select(
-        F.col(id_col),
-        F.concat_ws(
-            " ", F.slice(F.split(F.col(text), " "), 1, block_tokens)
-        ).alias("bk"),
-    )
-    a, b = blocks.alias("a"), blocks.alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.bk") == F.col("b.bk"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-    ).select(
-        F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-    )
-    sa = sh.select(F.col(id_col).alias("id_a"), "sh", F.col("cnt").alias("ca"))
-    sb = sh.select(F.col(id_col).alias("id_b"), "sh", F.col("cnt").alias("cb"))
-    inter = (
-        sa.join(cand, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.least("ca", "cb")).alias("imin"))
-    )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("nsh").alias("na"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("nsh").alias("nb"))
-    wj = F.col("imin") / (F.col("na") + F.col("nb") - F.col("imin"))
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(wj >= threshold)
-        .select("id_a", "id_b", F.round(wj, 6).alias("weighted_jaccard"))
+    blocks = _blocks(df, text, block_tokens, id_col)
+    cand = _key_pairs(blocks, blocks, "bk", id_col)
+    return _jaccard_over(
+        _intersections(cand, sh, sh, id_col, bags=True),
+        threshold,
+        "weighted_jaccard",
     )
 
 
@@ -715,9 +702,110 @@ def token_sets(
     )
 
 
-def _wave_band(col: str, waves: int, i: int):
-    """Deterministic hash band predicate for waved execution."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(waves)) == i
+# Waved execution (r11/r12). Module constants, not options: tests and
+# tools/clique_stress_r12.py patch them to force a schedule.
+# Candidate pairs one wave slice may materialize (~low-GB of
+# pre-distinct join scratch); <= 0 disables sub-splitting.
+_WAVE_CAND_CAP = 2e8
+# _wave_gc fires below this much free scratch (GB) ...
+_WAVE_GC_FREE_GB = 32.0
+# ... or below this multiple of the live pinned-block bytes.
+_WAVE_GC_HEADROOM = 4.0
+
+
+def _elements(
+    df: DataFrame, text: str, n: int, id_col: str, waves: int = 1
+) -> DataFrame:
+    """Element relation (id, sh) of the similarity joins: unigram
+    tokens at ``n`` = 1, word ``n``-grams otherwise. Persisted for
+    the one-wave plan, where the ranking lineage and the three verify
+    consumers (sizes + both join sides) would each re-run
+    scan+explode (r12: shingle_table's dedup moved in-row, so no
+    shared exchange materializes it any more; isolated floor 4.9 ->
+    6.0 s at sf0.1 without the pin). Waved execution recomputes it by
+    design — bounded scratch outranks cache at sf10+."""
+    el = (
+        token_sets(df, text, id_col)
+        if n == 1
+        else shingle_table(df, text, n, id_col)
+    )
+    return el.persist() if waves <= 1 else el
+
+
+def _hashed(el: DataFrame, id_col: str) -> DataFrame:
+    """(id, xxhash64(sh)): the 8-byte element key of prefix ranking,
+    candidates and waved verify (r11, the sf10 scratch fix — the
+    shingle STRINGS, ~50 B each, dominated sort spill and element
+    shuffles). Output-IDENTICAL: prefix-filter completeness holds
+    under ANY consistent global element order — (tdf, hash) is one —
+    and exact counts by hash equal the string counts except under an
+    exact 64-bit collision inside one corpus (~n^2/2^65 odds); the
+    sf0.01 oracle gate checks exactness empirically every round. The
+    one-wave verify stays string-keyed, exact by construction."""
+    return el.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
+
+
+def _rank(el: DataFrame, dfreq: DataFrame, id_col: str) -> DataFrame:
+    """Each doc's elements in the consistent global order of prefix
+    filtering: (id, sh, tdf, rn, nsz) with rn the 1-based rank by
+    ascending (document frequency, element) and nsz the doc's set
+    size — riding the SAME doc-keyed exchange as the ranking window
+    (doc partitions are document-length-bounded, safe to window, and
+    it saves a separate sizes agg + join). Element df arrives via
+    agg + equi-join, NOT an sh-keyed window: a window would buffer
+    each element's whole partition (a ubiquitous element at 100 TB is
+    one giant buffered partition), while the agg is map-side combined
+    and the join AQE-skew-splittable. df=1 elements are dropped AFTER
+    ranking (the prefix is defined on the full set): they collide
+    with nobody, and with a long rare tail they are most rows."""
+    w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
+    return (
+        el.join(dfreq, "sh")
+        .withColumn("rn", F.row_number().over(w))
+        .withColumn("nsz", F.count(F.lit(1)).over(Window.partitionBy(id_col)))
+        .filter(F.col("tdf") >= 2)
+    )
+
+
+def _in_prefix(t: float):
+    """PPJoin prefix predicate over :func:`_rank` rows: the first
+    nsz - ceil(t * nsz) + 1 elements."""
+    return F.col("rn") <= F.col("nsz") - F.ceil(F.col("nsz") * F.lit(t)) + 1
+
+
+def _ranked(
+    toks: DataFrame, id_col: str, waves: int, t: float | None = None
+) -> DataFrame:
+    """Pinned :func:`_rank` relation of a prefix self-join over the
+    hashed elements — cut to the (id, sh) prefix at threshold ``t``
+    when given. One wave: persisted (it feeds both candidate sides;
+    unpinned, the df-join and both windows execute twice — 4 Window
+    ops in the plan instead of 2). ``waves`` > 1: doc-banded
+    CONSTRUCTION (r11, the final sf10 scratch layer — the monolithic
+    df-join + doc-keyed rank over the full element relation was
+    itself ~the box's scratch budget). Ranking is per-doc
+    independent, so it bands by doc id with zero semantic effect
+    (the band filter reaches the element scan below the windows);
+    only the element-df relation is global, aggregated ONCE and
+    pinned as small checkpoint blocks that each band re-reads. Peak
+    scratch: max(one df aggregation, one band's join + sort)."""
+    el = _hashed(toks, id_col)
+    dfreq = el.groupBy("sh").agg(F.count(F.lit(1)).alias("tdf"))
+    if waves > 1:
+        dfreq = dfreq.localCheckpoint(eager=True)
+    ranked = _rank(el, dfreq, id_col)
+    if t is not None:
+        ranked = ranked.filter(_in_prefix(t)).select(id_col, "sh")
+    if waves <= 1:
+        return ranked.persist()
+    return _eager_union(
+        ranked.filter(_wave_band(id_col, waves) == j) for j in range(waves)
+    )
+
+
+def _wave_band(col: str, waves: int):
+    """Deterministic hash band (0 .. waves-1) of a column."""
+    return F.pmod(F.xxhash64(F.col(col)), F.lit(waves))
 
 
 def _wave_slice(col: str, s: int, j: int):
@@ -730,25 +818,21 @@ def _wave_slice(col: str, s: int, j: int):
 def _wave_subslices(mass_rows, waves: int) -> dict[int, int]:
     """Per-band sub-slice counts from measured candidate mass (r12,
     the waved-dedup "fifth onion layer" bound): a clique-heavy corpus
-    concentrates candidate pairs on few prefix elements, so ONE band's
-    candidate materialization can exceed the scratch envelope that
-    waving exists to protect. Each band whose estimated candidate
-    mass exceeds ``MPES_WAVE_CAND_CAP`` (default 2e8 pairs ≈ low-GB
-    of pre-distinct join scratch; <= 0 disables) is split into
+    concentrates candidate pairs on few keys, so ONE band's candidate
+    materialization can exceed the scratch envelope that waving
+    exists to protect. Each band whose estimated candidate mass
+    exceeds ``_WAVE_CAND_CAP`` (<= 0 disables) is split into
     ceil(mass / cap) slices by hash of the candidate's left doc id —
     every pair lands in exactly one slice of its band, so the union
     over slices is row-identical to the unsplit band while peak
-    scratch is bounded by one slice's candidates. The mass estimate
-    is one small aggregation over the (pinned, prefix-sized) element
-    relation collected as ``waves`` numbers — a deliberate eager step
-    in an already-eager (per-wave localCheckpoint) execution mode."""
-    cap = float(os.environ.get("MPES_WAVE_CAND_CAP", "2e8"))
+    scratch is bounded by one slice's candidates."""
     out = {i: 1 for i in range(waves)}
-    if cap <= 0 or not math.isfinite(cap):
-        return out
-    for r in mass_rows:
-        if r["band"] is not None and r["m"] is not None:
-            out[int(r["band"])] = max(1, math.ceil(float(r["m"]) / cap))
+    if _WAVE_CAND_CAP > 0:
+        for r in mass_rows:
+            if r["band"] is not None and r["m"] is not None:
+                out[int(r["band"])] = max(
+                    1, math.ceil(float(r["m"]) / _WAVE_CAND_CAP)
+                )
     return out
 
 
@@ -766,32 +850,27 @@ def _wave_gc(df: DataFrame) -> None:
     headroom — at gate scale (sf0.1, megabytes of wave scratch) the
     6 per-execution nudges cost 2.4 s of neardup_prefix_waved's
     14.5 s median while reclaiming nothing that matters. Pressure
-    test, both terms workload-scaled and env-tunable: free scratch
-    below an absolute floor (``MPES_WAVE_GC_FREE_GB``, default 32 —
-    below this, the next wave can plausibly ENOSPC regardless of
-    workload), or below ``MPES_WAVE_GC_HEADROOM`` (default 4) times
-    the LIVE pinned-block bytes, the direct measure of this
-    workload's per-wave scratch magnitude (the sf10 campaign's
-    67 GB-free box with tens-of-GB waves fires immediately under
-    either term; a TB-scratch cluster with the same waves skips
-    until headroom genuinely thins)."""
+    test, both terms workload-scaled: free scratch below an absolute
+    floor (``_WAVE_GC_FREE_GB`` — below this, the next wave can
+    plausibly ENOSPC regardless of workload), or below
+    ``_WAVE_GC_HEADROOM`` times the LIVE pinned-block bytes, the
+    direct measure of this workload's per-wave scratch magnitude (the
+    sf10 campaign's 67 GB-free box with tens-of-GB waves fires
+    immediately under either term; a TB-scratch cluster with the same
+    waves skips until headroom genuinely thins)."""
     try:
         sc = df.sparkSession.sparkContext
-        import shutil
-
         local = (
             sc._conf.get("spark.local.dir", None)
             or os.environ.get("SPARK_LOCAL_DIRS")
             or "/tmp"
         )
         free = shutil.disk_usage(local.split(",")[0]).free
-        floor = float(os.environ.get("MPES_WAVE_GC_FREE_GB", "32")) * 1e9
-        headroom = float(os.environ.get("MPES_WAVE_GC_HEADROOM", "4"))
         live = sum(
             r.diskSize() + r.memSize()
             for r in sc._jsc.sc().getRDDStorageInfo()
         )
-        if free > max(floor, headroom * live):
+        if free > max(_WAVE_GC_FREE_GB * 1e9, _WAVE_GC_HEADROOM * live):
             return
         sc._jvm.System.gc()
     except Exception:  # noqa: BLE001 - Connect mode has no _jvm; best-effort
@@ -809,6 +888,114 @@ def _wave_doc_filter(toks: DataFrame, cand: DataFrame, id_col: str) -> DataFrame
         .distinct()
     )
     return toks.join(F.broadcast(ids), id_col, "left_semi")
+
+
+def _eager_union(parts) -> DataFrame:
+    """Materialize lazily built parts one at a time — eager
+    ``localCheckpoint``, then a :func:`_wave_gc` nudge — and union
+    them: the wave discipline, at most one part's scratch live."""
+    done = []
+    for p in parts:
+        done.append(p.localCheckpoint(eager=True))
+        _wave_gc(p)
+    return functools.reduce(DataFrame.union, done)
+
+
+def _materialize(
+    out: DataFrame, pins, checkpoint: bool = True
+) -> DataFrame:
+    """Materialize-then-release: eagerly ``localCheckpoint`` the
+    (small, true-pair-bounded) result, then unpersist every relation
+    the operator pinned — a long-lived session (the ~200-query bench
+    loop) would otherwise accumulate their cached blocks across
+    calls. ``checkpoint=False`` returns the live plan with the pins
+    held, for plan inspection."""
+    if not checkpoint:
+        return out
+    out = out.localCheckpoint(eager=True)
+    for p in pins:
+        p.unpersist()
+    return out
+
+
+def _banded_pairs(
+    toks: DataFrame,
+    keys: DataFrame,
+    key: str,
+    cand,
+    verify,
+    id_col: str,
+    waves: int,
+    checkpoint: bool = True,
+    pins=(),
+    mass=None,
+) -> DataFrame:
+    """Candidate -> verify executor of the similarity-join family
+    (the partition -> candidate -> verify framework of distributed
+    top-k ranking joins, EDBT 2020 / REPOSE, ICDE 2021), returning
+    the verified pairs materialized with every pin released.
+
+    ``toks`` is the string element relation (persisted by
+    :func:`_elements` at one wave), ``keys`` the (id, ``key``, ...)
+    relation candidates form on, ``cand(a, b)`` the candidate pairs
+    (id_a, id_b) of a key relation ``a`` against ``b``,
+    ``verify(cand, elements, broadcast_pairs)`` the per-measure
+    verify, ``mass(keys, band)`` each band's estimated candidate
+    count as (band, m) rows (default: a ``key`` self-join, c*(c-1)/2
+    pairs per key value of multiplicity c) and ``pins`` the extra
+    relations the operator pinned.
+
+    ``waves`` = 1 is the flat plan: one candidate join, verify
+    against the string element relation, one final eager cut, then
+    the pins are released. ``waves`` > 1 (r11, the sf10 disk-wall
+    fix — SCALING.md "the scratch ceiling") runs candidate+verify per
+    hash band of ``key``, each wave materialized eagerly before the
+    next starts, so peak shuffle scratch is bounded by one band's
+    candidates plus the elements of that wave's participating docs
+    (broadcast-semi-filtered) instead of the full ~40x-corpus
+    relation. One small aggregation over ``keys`` estimates each
+    band's candidate mass and bands over ``_WAVE_CAND_CAP`` are
+    sub-split by hash of the candidate's left doc id (r12, see
+    :func:`_wave_subslices`). Waved verify runs on the HASHED element
+    relation, ``broadcast_pairs=True`` offering the (slice-bounded,
+    id-pair-only) candidates as the broadcast side (r11 fix ladder
+    (a)+(c), SCALING.md; the Jaccard verifies take it): the element
+    side then never shuffles for that join and the per-wave shuffle
+    carries 16 B rows instead of ~60 B strings. RESULT-IDENTICAL to one wave: a qualifying pair shares
+    >= 1 key, that key hashes into exactly one band, each wave
+    verifies against the docs' FULL element sets, and rows found in
+    several bands or slices are byte-identical and collapse in the
+    final distinct. Trade: the pruned scan + explode lineage
+    re-executes per wave — recompute is the currency that buys
+    bounded scratch."""
+    if waves <= 1:
+        out = verify(cand(keys, keys), toks, None)
+    else:
+        band = _wave_band(key, waves)
+        if mass is None:
+            def mass(k: DataFrame, b) -> DataFrame:
+                c = k.groupBy(b, key).agg(F.count(F.lit(1)).alias("c"))
+                return c.groupBy("band").agg(
+                    F.sum(F.col("c") * (F.col("c") - 1) / 2).alias("m")
+                )
+
+        slices = _wave_subslices(mass(keys, band.alias("band")).collect(), waves)
+        hashed = _hashed(toks, id_col)
+
+        def parts():
+            for i in range(waves):
+                b = keys.filter(band == i)
+                s = slices[i]
+                for j in range(s):
+                    a = b if s == 1 else b.filter(_wave_slice(id_col, s, j))
+                    # pinned: consumed 3x (doc filter + verify), and
+                    # the eager cut releases this slice's candidate
+                    # shuffle before the next plans
+                    c = cand(a, b).localCheckpoint(eager=True)
+                    yield verify(c, _wave_doc_filter(hashed, c, id_col), True)
+
+        out = _eager_union(parts()).distinct()
+    return _materialize(out, (toks, *pins), checkpoint)
 
 
 def prefix_filtered_pairs(
@@ -852,200 +1039,26 @@ def prefix_filtered_pairs(
     combinatorial space keeps most elements rare at any corpus
     size (SCALING.md). Same completeness theorem either way.
 
-    ``waves`` > 1 enables WAVED execution (r11, the sf10 disk-wall
-    fix — SCALING.md "the scratch ceiling"): the candidate+verify
-    stage runs in ``waves`` hash bands of the prefix element key, each
-    wave materialized eagerly before the next starts, so peak shuffle
-    scratch is bounded by one band's candidates plus the shingles of
-    that wave's participating docs (broadcast-semi-filtered) instead
-    of the full ~40x-corpus relation; clique-heavy bands are further
-    sub-split under ``MPES_WAVE_CAND_CAP`` (r12 — see
-    :func:`_wave_subslices`) so even one hot band's candidate
-    materialization stays bounded. RESULT-IDENTICAL to waves=1: a
-    qualifying pair shares >= 1 prefix element, that element hashes
-    into exactly one band, so every pair is found (possibly in
-    several bands — deduped by the final distinct), and each wave
-    verifies against the docs' FULL shingle sets. Trade: the pruned
-    scan + explode lineage re-executes per wave — recompute is the
-    currency that buys bounded scratch."""
-    toks = (
-        token_sets(df, text, id_col)
-        if n == 1
-        else shingle_table(df, text, n, id_col)
+    ``waves`` > 1 enables WAVED execution (:func:`_banded_pairs`,
+    banded on the prefix element key) with a doc-banded prefix
+    construction (:func:`_ranked`); RESULT-IDENTICAL to one wave.
+    ``checkpoint=False`` returns the live plan, pins held.
+
+    Eager: with the default ``checkpoint=True`` the verified pairs
+    are computed and ``localCheckpoint``ed when called."""
+    toks = _elements(df, text, n, id_col, waves)
+    keys = _ranked(toks, id_col, waves, threshold)
+    return _banded_pairs(
+        toks,
+        keys,
+        "sh",
+        lambda a, b: _key_pairs(a, b, "sh", id_col).distinct(),
+        lambda c, el, bc: verify_jaccard(c, el, threshold, id_col, bc),
+        id_col,
+        waves,
+        checkpoint,
+        pins=(keys,),
     )
-    if waves <= 1:
-        # persist: the element relation feeds the hashed ranking
-        # lineage AND the string-keyed verify three times (sizes +
-        # both join sides). Until r12 shingle_table's in-plan
-        # `.distinct()` exchange doubled as a shared materialization
-        # point (ReusedExchange); with the distinct now in-row an
-        # unpersisted lineage re-runs scan+explode per consumer
-        # (isolated floor 4.9 -> 6.0 s at sf0.1 without this).
-        # Waved mode deliberately recomputes instead — bounded
-        # scratch outranks cache at sf10+.
-        toks = toks.persist()
-    # Prefix construction ranks on xxhash64(sh), not the string (r11,
-    # second half of the sf10 scratch fix): the ranking stage is the
-    # ONE remaining global sort of the ~40x element relation, and its
-    # spill is dominated by the shingle STRINGS (~50 B each vs the
-    # 8 B hash — measured: the string-keyed sort alone overflowed the
-    # sf10 box that the waved candidate stage had just fit).
-    # Output-IDENTICAL: prefix-filter completeness holds under ANY
-    # consistent global element order — (tdf, hash) is one — and the
-    # verify stage recomputes TRUE Jaccard from the string relation,
-    # so extra candidates (tiebreak differences, hash-collision
-    # collisions) cannot change the verified pairs. The one
-    # theoretical gap: two DISTINCT shingles colliding on xxhash64
-    # make the order a weak order at that key, and an inconsistent
-    # tie-resolution at both docs' prefix boundaries could drop a
-    # candidate — requires an exact 64-bit collision inside one
-    # corpus (~n^2/2^65 odds; zero at any feasible n), and the
-    # sf0.01 oracle gate verifies exactness empirically every round.
-    toksh = toks.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    # element df via agg + equi-join, NOT a sh-keyed window: a window
-    # would buffer each shingle's whole partition — a ubiquitous
-    # element at 100 TB is one giant buffered partition, while the
-    # agg is map-side combined and the join AQE-skew-splittable
-    dfreq = toksh.groupBy("sh").agg(F.count(F.lit(1)).alias("tdf"))
-    w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
-    wn = Window.partitionBy(id_col)
-
-    def _rank(el: DataFrame, df_rel: DataFrame) -> DataFrame:
-        return (
-            el.join(df_rel, "sh")
-            # doc size rides the SAME doc-keyed exchange as the
-            # ranking window (doc partitions are document-length-
-            # bounded — safe to window, and it saves the separate
-            # sizes agg + join)
-            .withColumn("rn", F.row_number().over(w))
-            .withColumn("n", F.count(F.lit(1)).over(wn))
-            .filter(
-                F.col("rn")
-                <= F.col("n") - F.ceil(F.col("n") * F.lit(threshold)) + 1
-            )
-            # df=1 elements collide with nobody — dropping them from
-            # the candidate join loses no pair (a match needs a SHARED
-            # prefix element) and removes every singleton join key;
-            # with a long rare tail that is most of the prefix relation
-            .filter(F.col("tdf") >= 2)
-            .select(F.col(id_col), "sh")
-        )
-
-    if waves > 1:
-        # Doc-banded prefix CONSTRUCTION (r11, the final sf10 scratch
-        # layer): the monolithic df-join + doc-keyed rank over the
-        # full element relation was itself ~the box's scratch budget
-        # (measured: runs died in these stages with every later stage
-        # already waved). Ranking is per-doc independent, so it bands
-        # by doc id with zero semantic effect; only the element-df
-        # relation is global, and it is aggregated ONCE and pinned as
-        # (small, distinct-element-bounded) checkpoint blocks that
-        # each band re-shuffles instead of re-aggregating. Peak
-        # scratch: max(one df aggregation, one band's join + sort).
-        dfreq = dfreq.localCheckpoint(eager=True)
-        pfx_parts = []
-        for j in range(waves):
-            pfx_parts.append(
-                _rank(
-                    toksh.filter(_wave_band(id_col, waves, j)), dfreq
-                ).localCheckpoint(eager=True)
-            )
-            _wave_gc(toksh)
-        prefix = pfx_parts[0]
-        for p in pfx_parts[1:]:
-            prefix = prefix.union(p)
-    else:
-        # consumed as BOTH sides of the candidate self-join — persist,
-        # or the df-join + both windows execute twice (plan showed 4
-        # Window ops before, 2 after)
-        prefix = _rank(toksh, dfreq).persist()
-    if waves <= 1:
-        a = prefix.select(F.col(id_col).alias("id_a"), "sh")
-        b = prefix.select(F.col(id_col).alias("id_b"), "sh")
-        cand = (
-            a.join(b, "sh")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        # materialize the (small, true-pair-bounded) verified result so
-        # the persisted relations can be released NOW — a long-lived
-        # session (the ~200-query bench loop) would otherwise accumulate
-        # their cached blocks across calls; checkpoint=False keeps the
-        # live plan (and the caches) for plan inspection
-        out = verify_jaccard(cand, toks, threshold, id_col)
-        if not checkpoint:
-            return out
-        out = out.localCheckpoint(eager=True)
-        prefix.unpersist()
-        toks.unpersist()
-        return out
-
-    # Candidate-mass schedule (r12, VERDICT r11 #2): one small agg
-    # over the pinned prefix relation estimates each band's candidate
-    # pairs (sum over elements of c*(c-1)/2, c = prefix occurrences);
-    # bands over MPES_WAVE_CAND_CAP are sub-split by hash of the
-    # pair's LEFT id so one clique-heavy band can no longer
-    # materialize an unbounded candidate set — see _wave_subslices.
-    mass = (
-        prefix.groupBy(
-            F.pmod(F.xxhash64("sh"), F.lit(waves)).alias("band"), "sh"
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy("band")
-        .agg(
-            F.sum(F.col("c") * (F.col("c") - F.lit(1)) / F.lit(2)).alias("m")
-        )
-        .collect()
-    )
-    slices = _wave_subslices(mass, waves)
-    parts: list[DataFrame] = []
-    for i in range(waves):
-        band = prefix.filter(_wave_band("sh", waves, i))
-        for j in range(slices[i]):
-            a = band.select(F.col(id_col).alias("id_a"), "sh")
-            if slices[i] > 1:
-                # every (id_a < id_b) pair is generated from its id_a
-                # row, so slicing the a side by hash(id_a) partitions
-                # the band's pairs exactly — complete and disjoint
-                a = a.filter(_wave_slice("id_a", slices[i], j))
-            b = band.select(F.col(id_col).alias("id_b"), "sh")
-            cand = (
-                a.join(b, "sh")
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b")
-                .distinct()
-                # pin the slice's candidates: consumed 3x below (doc
-                # filter + verify), and the eager cut means this
-                # slice's candidate shuffle is released before the
-                # next plans
-                .localCheckpoint(eager=True)
-            )
-            # Waved verify runs on the HASHED element relation with
-            # the (slice-bounded, id-pair-only) candidates broadcast
-            # (r11 fix ladder (a)+(c), SCALING.md): the sa side then
-            # never shuffles, and the per-wave element shuffle
-            # carries 16 B rows instead of ~60 B strings. icnt/nsh by
-            # hash equal the string counts except under an exact
-            # 64-bit collision (~1e-13/pair; the sf0.01 oracle gate
-            # checks exactness empirically). The waves=1 gate path
-            # stays string-keyed, exact by construction.
-            toks_w = _wave_doc_filter(toksh, cand, id_col)
-            parts.append(
-                verify_jaccard(
-                    cand, toks_w, threshold, id_col, broadcast_pairs=True
-                ).localCheckpoint(eager=True)
-            )
-            _wave_gc(cand)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    # a pair can surface in several bands (one per shared prefix
-    # element's band) with byte-identical verified rows
-    out = out.distinct()
-    out = out.localCheckpoint(eager=True) if checkpoint else out
-    prefix.unpersist()
-    return out
 
 
 def prefix_filtered_pairs_sql(
@@ -1108,47 +1121,6 @@ WHERE CAST(i.icnt AS DOUBLE) / (za.n + zb.n - i.icnt) >= {t_lit}
 """.strip()
 
 
-def _dual_verify(
-    cand: DataFrame,
-    toks: DataFrame,
-    jaccard_threshold: float,
-    containment_threshold: float,
-    id_col: str,
-) -> DataFrame:
-    """ONE intersection aggregation; Jaccard and containment are both
-    ratios over (icnt, nsh_a, nsh_b) — shared work, single agg."""
-    sizes = toks.groupBy(id_col).agg(F.count(F.lit(1)).alias("nsh"))
-    sa = toks.select(F.col(id_col).alias("id_a"), "sh")
-    sb = toks.select(F.col(id_col).alias("id_b"), "sh")
-    inter = (
-        sa.join(cand, "id_a")
-        .join(sb, ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("icnt"))
-    )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("nsh").alias("nsh_a"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("nsh").alias("nsh_b"))
-    jac = F.col("icnt") / (F.col("nsh_a") + F.col("nsh_b") - F.col("icnt"))
-    cont = F.col("icnt") / F.least("nsh_a", "nsh_b")
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .filter(
-            (jac >= jaccard_threshold) | (cont >= containment_threshold)
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jac, 6).alias("jaccard"),
-            F.round(cont, 6).alias("containment"),
-            (jac >= jaccard_threshold).cast("int").alias("jaccard_dup"),
-            (cont >= containment_threshold).cast("int").alias(
-                "containment_dup"
-            ),
-        )
-    )
-
-
 def prefix_dual_pairs(
     df: DataFrame,
     text: str = "text",
@@ -1197,43 +1169,27 @@ def prefix_dual_pairs(
     of it) * d candidates, and ubiquitous elements are in nobody's
     prefix); the one-sided join is the price of containment
     completeness and is the standard asymmetric-prefix scheme. All
-    joins equi-keyed; the element relation is RECOMPUTED per consumer
-    (cheap scan+explode lineage — persisting it was measurably slower
-    cold and would be a memory hazard at scale, r9)."""
-    t_eff = min(jaccard_threshold, containment_threshold)
-    toks = (
-        token_sets(df, text, id_col)
-        if n == 1
-        else shingle_table(df, text, n, id_col)
-    )
-    if waves <= 1:
-        # persist: ranking lineage + three verify consumers — see
-        # prefix_filtered_pairs (r12; waved mode recomputes by design)
-        toks = toks.persist()
-    # hash-keyed ranking/candidates, string-keyed verify — same
-    # scratch rationale and output-identity argument as
-    # prefix_filtered_pairs (r11)
-    toksh = toks.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
-    dfreq = toksh.groupBy("sh").agg(F.count(F.lit(1)).alias("tdf"))
-    w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
-    wn = Window.partitionBy(id_col)
-    # element df via agg + equi-join (NOT a sh-keyed window — see
-    # prefix_filtered_pairs); doc size rides the doc-keyed exchange
-    enriched = (
-        toksh.join(dfreq, "sh")
-        .withColumn("rn", F.row_number().over(w))
-        .withColumn("nsz", F.count(F.lit(1)).over(wn))
-        .filter(F.col("tdf") >= 2)  # df=1 elements collide with nobody
-        .persist()
-    )
-    prefix = enriched.filter(
-        F.col("rn") <= F.col("nsz") - F.ceil(F.col("nsz") * F.lit(t_eff)) + 1
-    ).select(F.col(id_col).alias("id_p"), "sh")
-    probe = enriched.select(F.col(id_col).alias("id_q"), "sh")
+    joins equi-keyed; hash-keyed ranking and candidates, string-keyed
+    one-wave verify (see :func:`_hashed`). ``waves`` > 1 bands the
+    PREFIX side's element key only (:func:`_banded_pairs`; the
+    one-sided join stays complete — the shared prefix element lands
+    in exactly one band). The one-sided join emits tdf probe rows per
+    prefix row, so a band's candidate mass is sum(tdf) over its
+    prefix rows; hot bands sub-split by hash of the prefix-side id,
+    and a pair then surfacing in two slices (once per direction)
+    collapses in the final distinct.
 
-    def _cand(pfx: DataFrame) -> DataFrame:
+    Eager: with the default ``checkpoint=True`` the verified pairs
+    are computed and ``localCheckpoint``ed when called."""
+    tj, tc = jaccard_threshold, containment_threshold
+    toks = _elements(df, text, n, id_col, waves)
+    ranked = _ranked(toks, id_col, waves)
+    probe = ranked.select(F.col(id_col).alias("id_q"), "sh")
+
+    def cand(pfx: DataFrame, _b: DataFrame) -> DataFrame:
         return (
-            pfx.join(probe, "sh")
+            pfx.select(F.col(id_col).alias("id_p"), "sh")
+            .join(probe, "sh")
             .filter(F.col("id_p") != F.col("id_q"))
             .select(
                 F.least("id_p", "id_q").alias("id_a"),
@@ -1242,67 +1198,34 @@ def prefix_dual_pairs(
             .distinct()
         )
 
-    if waves <= 1:
-        out = _dual_verify(
-            _cand(prefix), toks, jaccard_threshold, containment_threshold,
-            id_col,
+    def verify(c: DataFrame, el: DataFrame, _bc) -> DataFrame:
+        # ONE intersection aggregation; both ratios derive from it
+        jac, cont = _jaccard(), F.col("icnt") / F.least("nsh_a", "nsh_b")
+        return (
+            _intersections(c, el, el, id_col)
+            .filter((jac >= tj) | (cont >= tc))
+            .select(
+                "id_a",
+                "id_b",
+                F.round(jac, 6).alias("jaccard"),
+                F.round(cont, 6).alias("containment"),
+                (jac >= tj).cast("int").alias("jaccard_dup"),
+                (cont >= tc).cast("int").alias("containment_dup"),
+            )
         )
-        if not checkpoint:
-            return out
-        out = out.localCheckpoint(eager=True)
-        enriched.unpersist()
-        toks.unpersist()
-        return out
 
-    # Waved execution (r11, sf10 scratch bound — see
-    # prefix_filtered_pairs): bands over the PREFIX side's element key
-    # only (the one-sided join stays complete — the shared prefix
-    # element lands in exactly one band); per-wave verify against the
-    # wave docs' FULL element sets; byte-identical rows across bands
-    # collapse in the final distinct.
-    # Candidate-mass schedule (r12, VERDICT r11 #2): the one-sided
-    # join emits tdf probe rows per prefix row, so each band's
-    # candidate mass is sum(tdf) over its prefix rows — one agg over
-    # the persisted enriched relation. Hot bands sub-split by hash of
-    # id_p; a pair can then surface in two slices (once per
-    # direction), which the final cross-band distinct already
-    # collapses — see _wave_subslices.
-    mass = (
-        enriched.filter(
-            F.col("rn")
-            <= F.col("nsz") - F.ceil(F.col("nsz") * F.lit(t_eff)) + 1
-        )
-        .groupBy(F.pmod(F.xxhash64("sh"), F.lit(waves)).alias("band"))
-        .agg(F.sum("tdf").cast("double").alias("m"))
-        .collect()
+    return _banded_pairs(
+        toks,
+        ranked.filter(_in_prefix(min(tj, tc))),
+        "sh",
+        cand,
+        verify,
+        id_col,
+        waves,
+        checkpoint,
+        pins=(ranked,),
+        mass=lambda k, b: k.groupBy(b).agg(F.sum("tdf").cast("double").alias("m")),
     )
-    slices = _wave_subslices(mass, waves)
-    parts: list[DataFrame] = []
-    for i in range(waves):
-        band_p = prefix.filter(_wave_band("sh", waves, i))
-        for j in range(slices[i]):
-            pfx = (
-                band_p
-                if slices[i] == 1
-                else band_p.filter(_wave_slice("id_p", slices[i], j))
-            )
-            cand = _cand(pfx).localCheckpoint(eager=True)
-            # hashed-element verify in waves (see prefix_filtered_pairs)
-            toks_w = _wave_doc_filter(toksh, cand, id_col)
-            parts.append(
-                _dual_verify(
-                    cand, toks_w, jaccard_threshold, containment_threshold,
-                    id_col,
-                ).localCheckpoint(eager=True)
-            )
-            _wave_gc(cand)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    out = out.distinct()
-    out = out.localCheckpoint(eager=True) if checkpoint else out
-    enriched.unpersist()
-    return out
 
 
 def prefix_filtered_join(
@@ -1337,16 +1260,12 @@ def prefix_filtered_join(
     (appearing once across BOTH relations) are pruned from both
     prefixes. Output: (id_a = left id, id_b = right id, jaccard) —
     ids may coincide across relations; they are namespaced by side,
-    not compared."""
-    def mk(d: DataFrame) -> DataFrame:
-        return (
-            token_sets(d, text, id_col)
-            if n == 1
-            else shingle_table(d, text, n, id_col)
-        )
+    not compared.
 
-    tl = mk(left).persist()
-    tr = mk(right).persist()
+    Eager: with the default ``checkpoint=True`` the verified pairs
+    are computed and ``localCheckpoint``ed when called."""
+    tl = _elements(left, text, n, id_col)
+    tr = _elements(right, text, n, id_col)
     dfreq = (
         tl.select("sh")
         .unionAll(tr.select("sh"))
@@ -1354,35 +1273,17 @@ def prefix_filtered_join(
         .agg(F.count(F.lit(1)).alias("tdf"))
     )
 
-    def _prefix(toks: DataFrame) -> DataFrame:
-        w = Window.partitionBy(id_col).orderBy(F.col("tdf").asc(), F.col("sh"))
-        wn = Window.partitionBy(id_col)
-        return (
-            toks.join(dfreq, "sh")
-            .withColumn("rn", F.row_number().over(w))
-            .withColumn("nsz", F.count(F.lit(1)).over(wn))
-            .filter(
-                F.col("rn")
-                <= F.col("nsz") - F.ceil(F.col("nsz") * F.lit(threshold)) + 1
-            )
-            .filter(F.col("tdf") >= 2)
-            .select(F.col(id_col), "sh")
+    def prefix(toks: DataFrame, s: str) -> DataFrame:
+        return _rank(toks, dfreq, id_col).filter(_in_prefix(threshold)).select(
+            F.col(id_col).alias(f"id_{s}"), "sh"
         )
 
     cand = (
-        _prefix(tl)
-        .select(F.col(id_col).alias("id_a"), "sh")
-        .join(_prefix(tr).select(F.col(id_col).alias("id_b"), "sh"), "sh")
-        .select("id_a", "id_b")
-        .distinct()
+        prefix(tl, "a").join(prefix(tr, "b"), "sh").select("id_a", "id_b").distinct()
     )
-    out = verify_jaccard_cross(cand, tl, tr, threshold, id_col)
-    if not checkpoint:
-        return out
-    out = out.localCheckpoint(eager=True)
-    tl.unpersist()
-    tr.unpersist()
-    return out
+    return _materialize(
+        verify_jaccard_cross(cand, tl, tr, threshold, id_col), (tl, tr), checkpoint
+    )
 
 
 def prefix_filtered_join_sql(

@@ -2704,38 +2704,28 @@ def test_mat_decode_stats_parity(spark):
     assert g.loc[g.doc_id == 2, "n_vars"].item() == 0
 
 
-def test_wave_gc_pressure_gated(spark):
+def test_wave_gc_pressure_gated(spark, monkeypatch):
     """_wave_gc fires only under scratch pressure (r11): with ample
     free scratch it must return without a JVM full GC (the 6 forced
     GCs cost 2.4 s/execution at gate scale), and under a forced
     pressure threshold it must still complete (the gc path)."""
-    import os
     import time
 
-    from mpes_spark.extras.dedup import _wave_gc
-
     df = spark.range(10)
-    old = os.environ.get("MPES_WAVE_GC_FREE_GB")
-    try:
-        os.environ["MPES_WAVE_GC_FREE_GB"] = "0.000001"
-        t0 = time.perf_counter()
-        _wave_gc(df)
-        skip_ms = (time.perf_counter() - t0) * 1000
-        os.environ["MPES_WAVE_GC_FREE_GB"] = "1000000"
-        t0 = time.perf_counter()
-        _wave_gc(df)  # gc path must not raise
-        gc_ms = (time.perf_counter() - t0) * 1000
-        # the skip path must not have paid a full GC (forced major
-        # GCs on the test JVM measure ~100 ms+; the skip path is a
-        # disk_usage + storage-info read). Bound is relative to the
-        # measured gc path so a loaded box inflates both sides
-        # instead of false-failing the absolute check.
-        assert skip_ms < max(50.0, gc_ms)
-    finally:
-        if old is None:
-            os.environ.pop("MPES_WAVE_GC_FREE_GB", None)
-        else:
-            os.environ["MPES_WAVE_GC_FREE_GB"] = old
+    monkeypatch.setattr(DD, "_WAVE_GC_FREE_GB", 0.000001)
+    t0 = time.perf_counter()
+    DD._wave_gc(df)
+    skip_ms = (time.perf_counter() - t0) * 1000
+    monkeypatch.setattr(DD, "_WAVE_GC_FREE_GB", 1000000.0)
+    t0 = time.perf_counter()
+    DD._wave_gc(df)  # gc path must not raise
+    gc_ms = (time.perf_counter() - t0) * 1000
+    # the skip path must not have paid a full GC (forced major
+    # GCs on the test JVM measure ~100 ms+; the skip path is a
+    # disk_usage + storage-info read). Bound is relative to the
+    # measured gc path so a loaded box inflates both sides
+    # instead of false-failing the absolute check.
+    assert skip_ms < max(50.0, gc_ms)
 
 
 def test_waved_execution_parity(spark):
@@ -2793,22 +2783,15 @@ def test_waved_execution_parity(spark):
     assert flat and key(waved) == key(flat), "blocked_jaccard"
 
 
-def test_waved_subslice_parity(spark):
+def test_waved_subslice_parity(spark, monkeypatch):
     """Candidate-mass sub-splitting (r12, the waved-dedup clique
-    bound) is likewise result-INVISIBLE: with MPES_WAVE_CAND_CAP
-    forced to 1 candidate pair, EVERY band sub-splits into per-id
-    slices, and the row set must still equal the flat execution for
-    both prefix operators — including dual-measure pairs that now
-    surface once per direction across slices (collapsed by the final
-    distinct). Also pins the schedule math: cap<=0 disables."""
-    import os
-
-    from mpes_spark.extras.dedup import (
-        _wave_subslices,
-        prefix_dual_pairs,
-        prefix_filtered_pairs,
-    )
-
+    bound) is likewise result-INVISIBLE: with the candidate cap
+    (``_WAVE_CAND_CAP``) forced to 1 candidate pair, EVERY band
+    sub-splits into per-id slices, and the row set must still equal
+    the flat execution for all three banded operators — including
+    dual-measure pairs that now surface once per direction across
+    slices (collapsed by the final distinct). Also pins the schedule
+    math: cap<=0 disables."""
     rows = [
         (1, "quick brown fox jumps over the lazy dog"),
         (2, "quick brown fox jumps over the lazy cat"),
@@ -2826,29 +2809,128 @@ def test_waved_subslice_parity(spark):
     def key(rs):
         return sorted(tuple(r) for r in rs)
 
-    old = os.environ.get("MPES_WAVE_CAND_CAP")
-    try:
-        os.environ["MPES_WAVE_CAND_CAP"] = "1"
-        assert _wave_subslices([{"band": 0, "m": 10.0}], 2) == {0: 10, 1: 1}
-        flat = prefix_filtered_pairs(docs, threshold=0.5, n=3).collect()
-        sliced = prefix_filtered_pairs(
-            docs, threshold=0.5, n=3, waves=3
-        ).collect()
-        assert flat and key(sliced) == key(flat), "prefix_filtered sliced"
-        flat = prefix_dual_pairs(
-            docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1
-        ).collect()
-        sliced = prefix_dual_pairs(
-            docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1,
-            waves=3,
-        ).collect()
-        assert flat and key(sliced) == key(flat), "prefix_dual sliced"
-        os.environ["MPES_WAVE_CAND_CAP"] = "0"
-        assert _wave_subslices([{"band": 0, "m": 1e12}], 3) == {
-            0: 1, 1: 1, 2: 1,
-        }
-    finally:
-        if old is None:
-            os.environ.pop("MPES_WAVE_CAND_CAP", None)
-        else:
-            os.environ["MPES_WAVE_CAND_CAP"] = old
+    monkeypatch.setattr(DD, "_WAVE_CAND_CAP", 1)
+    assert DD._wave_subslices([{"band": 0, "m": 10.0}], 2) == {0: 10, 1: 1}
+    flat = DD.prefix_filtered_pairs(docs, threshold=0.5, n=3).collect()
+    sliced = DD.prefix_filtered_pairs(
+        docs, threshold=0.5, n=3, waves=3
+    ).collect()
+    assert flat and key(sliced) == key(flat), "prefix_filtered sliced"
+    flat = DD.prefix_dual_pairs(
+        docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1
+    ).collect()
+    sliced = DD.prefix_dual_pairs(
+        docs, jaccard_threshold=0.5, containment_threshold=0.9, n=1,
+        waves=3,
+    ).collect()
+    assert flat and key(sliced) == key(flat), "prefix_dual sliced"
+    flat = DD.blocked_jaccard_pairs(
+        docs, n=3, block_tokens=2, threshold=0.2
+    ).collect()
+    sliced = DD.blocked_jaccard_pairs(
+        docs, n=3, block_tokens=2, threshold=0.2, waves=3
+    ).collect()
+    assert flat and key(sliced) == key(flat), "blocked_jaccard sliced"
+    monkeypatch.setattr(DD, "_WAVE_CAND_CAP", 0)
+    assert DD._wave_subslices([{"band": 0, "m": 1e12}], 3) == {
+        0: 1, 1: 1, 2: 1,
+    }
+
+
+def test_pair_operators_release_pins(spark):
+    """Every pair operator of the similarity-join family releases what
+    it pinned: once its result is collected the session's cache
+    manager holds nothing — at default arguments and, where the
+    operator takes waves, at waves=3. A persisted relation nobody
+    unpersists stays cached for the life of the session (the
+    ~200-query bench loop accumulates them)."""
+    rows = [
+        (1, "quick brown fox jumps over the lazy dog"),
+        (2, "quick brown fox jumps over the lazy cat"),
+        (3, "quick brown fox leaps over the lazy dog today"),
+        (4, "entirely different tokens appear here now"),
+        (5, "entirely different tokens appear here now"),
+        (6, "alpha beta gamma delta epsilon zeta"),
+        (7, "alpha beta gamma delta epsilon zeta"),
+        (8, "quick brown fox jumps over the lazy dog"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    left, right = docs.filter("doc_id <= 4"), docs.filter("doc_id > 4")
+    runs = [
+        ("blocked_jaccard_pairs", lambda: DD.blocked_jaccard_pairs(docs)),
+        ("prefix_filtered_pairs", lambda: DD.prefix_filtered_pairs(docs)),
+        ("prefix_dual_pairs", lambda: DD.prefix_dual_pairs(docs)),
+        ("prefix_filtered_join", lambda: DD.prefix_filtered_join(left, right)),
+        ("minhash_neardup_pairs", lambda: DD.minhash_neardup_pairs(docs)),
+        (
+            "blocked_jaccard_pairs waves=3",
+            lambda: DD.blocked_jaccard_pairs(docs, waves=3),
+        ),
+        (
+            "prefix_filtered_pairs waves=3",
+            lambda: DD.prefix_filtered_pairs(docs, waves=3),
+        ),
+        (
+            "prefix_dual_pairs waves=3",
+            lambda: DD.prefix_dual_pairs(docs, waves=3),
+        ),
+    ]
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name, run in runs:
+        spark.catalog.clearCache()
+        run().collect()
+        assert cache.isEmpty(), f"{name} left a persisted relation cached"
+
+
+def test_shingle_inputs_one_row_per_doc(spark, monkeypatch):
+    """shingle_table / token_sets deduplicate IN-ROW, so their
+    per-document set semantics need one input row per document: a
+    repeated id would silently inflate every set size and
+    intersection count downstream. Every registered extras query (the
+    one registry whose builders reach these functions) is built at
+    sf0.01 with both functions wrapped to record their input, and each
+    recorded input relation must carry a unique id column — the
+    contract checked for every current caller (the corpus, its
+    batch/corpus splits and the re-crawl union with ids + 1 000 000)."""
+    import inspect
+
+    from mpes_spark.extras.registry import extras_queries
+    from tests.conftest import SF_ORACLE
+
+    calls = []
+    current = [None]
+
+    def recording(real):
+        sig = inspect.signature(real)
+
+        def rec(*args, **kwargs):
+            bound = sig.bind(*args, **kwargs)
+            bound.apply_defaults()
+            a = bound.arguments
+            calls.append((current[0], a["df"], a["id_col"]))
+            return real(*args, **kwargs)
+
+        return rec
+
+    monkeypatch.setattr(DD, "shingle_table", recording(DD.shingle_table))
+    monkeypatch.setattr(DD, "token_sets", recording(DD.token_sets))
+    jsc = spark.sparkContext._jsc
+    for name, q in extras_queries().items():
+        current[0] = name
+        before = set(jsc.getPersistentRDDs().keys())
+        start = len(calls)
+        q(spark, SF_ORACLE)
+        for _, df, id_col in calls[start:]:
+            n, ids = df.agg(F.count(F.lit(1)), F.countDistinct(id_col)).first()
+            assert n == ids, f"{name}: {n} rows, {ids} distinct {id_col}"
+        # drop what the builder pinned (the bench loop's between-query
+        # cleanup), so ~100 builds do not pile up in one session
+        spark.catalog.clearCache()
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in before:
+                rdd.unpersist(False)
+    reached = {name for name, _, _ in calls}
+    # the corpus, its batch/corpus split and the re-crawl union
+    assert {
+        "neardup_prefix_filter", "neardup_cross_ingest", "dedup_clusters"
+    } <= reached, reached

@@ -8,7 +8,7 @@ candidate mass concentrates quadratically in the few bands holding
 the clique's prefix elements) plus unique background docs — then runs
 `prefix_filtered_pairs(waves=W)` twice:
 
-  A. sub-splitting disabled (MPES_WAVE_CAND_CAP=0) — the r11 behavior:
+  A. sub-splitting disabled (dedup._WAVE_CAND_CAP = 0) — the r11 behavior:
      each band materializes ALL its candidates in one localCheckpoint.
   B. sub-splitting on with a deliberately low cap, forcing each hot
      band into many slices.
@@ -93,7 +93,7 @@ def main() -> None:
     )
     from pyspark.sql import functions as F
 
-    from mpes_spark.extras.dedup import prefix_filtered_pairs
+    from mpes_spark.extras import dedup as DD
 
     # clique: a fixed 60-token template with ONE varying token per doc
     # (Jaccard between any two clique docs ~ (58-2)/(58+2) >= 0.9 at
@@ -119,7 +119,7 @@ def main() -> None:
     docs_plan = base.unionByName(bg)
 
     def run(cap: str):
-        os.environ["MPES_WAVE_CAND_CAP"] = cap
+        DD._WAVE_CAND_CAP = float(cap)
         # fresh checkpoint per run (a blanket unpersist would destroy
         # a shared one's blocks out from under the next run's plan)
         docs = docs_plan.localCheckpoint(eager=True)
@@ -128,7 +128,7 @@ def main() -> None:
         floor = _du(_scratch_dirs(spark))
         t0 = time.monotonic()
         with PeakWatcher(spark) as w:
-            out = prefix_filtered_pairs(
+            out = DD.prefix_filtered_pairs(
                 docs, threshold=0.85, n=3, waves=waves
             ).collect()
         dt = time.monotonic() - t0
